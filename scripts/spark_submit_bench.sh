@@ -17,13 +17,17 @@ cd "$(dirname "$0")/.."
 CLASS="${1:?usage: spark_submit_bench.sh <mainClass> [args...]}"
 shift
 JAR="target/scala-2.13/extensioncrawlerspark_2.13-0.1.0.jar"
+# defaults fit the machine: every core, and a heap of MemTotal/2 clamped to
+# 2-8 GB (the same formula as build.sbt)
+CPUS="${SPARK_GRAFT_CPUS:-$(nproc)}"
+MEM="${SPARK_DRIVER_MEM:-$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' /proc/meminfo 2>/dev/null || echo 2g)}"
 [ -f "$JAR" ] || { echo "jar missing — run: sbt -batch package" >&2; exit 1; }
 exec /opt/spark/bin/spark-submit \
-  --master "local[${SPARK_GRAFT_CPUS:-32}]" \
+  --master "local[$CPUS]" \
   --class "$CLASS" \
-  --driver-memory "${SPARK_DRIVER_MEM:-24g}" \
-  --conf spark.driver.extraJavaOptions="-Xms${SPARK_DRIVER_MEM:-24g} -XX:+UseParallelGC" \
-  --conf spark.sql.shuffle.partitions="${SPARK_GRAFT_CPUS:-32}" \
+  --driver-memory "$MEM" \
+  --conf spark.driver.extraJavaOptions="-Xms$MEM -XX:+UseParallelGC" \
+  --conf spark.sql.shuffle.partitions="$CPUS" \
   --conf spark.sql.session.timeZone=UTC \
   --conf spark.local.dir=/dev/shm/graft-spark \
   --conf spark.ui.enabled=false \

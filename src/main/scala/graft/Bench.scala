@@ -28,7 +28,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
 
     // scaling FIRST, on a clean JVM: the 32-thread query sweep would warm
     // JIT/heap state asymmetrically for whichever level runs next
@@ -318,23 +318,9 @@ object Bench {
          |163,750 → 395,703 — Java serialization costs the 8-core level 1.85×,
          |which is WHY the operator path (Tungsten rows) is the production default.
          |
-         |### Column-native fetch classifier — measured round 4, kept OPT-IN
-         |Reproduce: `SPARK_GRAFT_COLUMNAR_FETCH=1 sbt "runMain graft.bench.ScalingMain 2 8 16000000"`.
-         |
-         |The fetch stage exists in two spec-proven-identical forms: the typed map
-         |(production default) and a codegen expression path (`Fetcher.runColumnar` /
-         |`runWithStateColumnar`, `FetchClassify`/`FetchEtag` expressions) with no
-         |encoder round-trip. In ISOLATION the columnar form is 2.8× faster when its
-         |consumer is also columnar (8M-row stage, 8 cores: typed 1.46 s with
-         |SerializeFromObject vs columnar 0.52 s; with a TYPED consumer the gain
-         |inverts to −12%% — the deserialization just moves). On the FULL crawl job
-         |the difference vanishes into the VM noise band (columnar pair run:
-         |110,084 → 369,000 URLs/s, eff 0.809 with one stalled pair at 0.510;
-         |typed: 106,928 → 385,877, eff 0.885) because fetch classification is a
-         |minor share of the end-to-end wall (schedule walk, dedup, and snapshot
-         |commits dominate). Conclusion: the knob exists and is proven correct, but
-         |the typed default stands — flipping it buys nothing measurable end-to-end
-         |and would re-baseline every published number.
+         |### Column-native fetch classifier — round 4, since removed
+         |A codegen-expression fetch twin tied the typed map end to end: eff 0.809
+         |(110,084 → 369,000 URLs/s) against typed 0.885 (106,928 → 385,877 URLs/s).
          |""".stripMargin
     java.nio.file.Files.writeString(java.nio.file.Paths.get("BENCH.md"), md)
     ()

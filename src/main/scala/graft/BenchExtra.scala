@@ -15,14 +15,14 @@ import org.apache.spark.sql.SparkSession
   *   BenchExtra [qPrefix ...]           time the matching queries (all if none)
   * Env:
   *   SPARK_GRAFT_SF_DIR   data dir (default /root/testdata/sf0.1)
-  *   SPARK_GRAFT_CPUS     local core count (default 32)
+  *   SPARK_GRAFT_CPUS     local core count (default: all available cores)
   *   SPARK_GRAFT_REPS     timed repetitions per query (default 3, min kept)
   *   SPARK_GRAFT_PLAN_DIR if set, write <name>.txt formatted plans there
   */
 object BenchExtra {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
     val planDir = sys.env.get("SPARK_GRAFT_PLAN_DIR")
 

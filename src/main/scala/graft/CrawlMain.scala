@@ -22,7 +22,8 @@ object CrawlMain {
     val numIds = if (args.length > 1) args(1).toInt else 10000
     val runId = if (args.length > 2) args(2).toInt else 1
     val seed = if (args.length > 3) args(3).toLong else 42L
-    val cores = if (args.length > 4) args(4) else sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
+    val cores = if (args.length > 4) args(4)
+      else sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
 
     val spark = SparkSession.builder()
       .master(s"local[$cores]")

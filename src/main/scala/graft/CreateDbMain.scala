@@ -28,8 +28,9 @@ import graft.snapshot.SnapshotTable
 object CreateDbMain {
   def main(args: Array[String]): Unit = {
     val fromCrawl = args.headOption.contains("--from-crawl")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
+      .master(s"local[$cpus]")
       .appName("graft-create-db")
       .config("spark.sql.shuffle.partitions", 32)
       .config("spark.sql.session.timeZone", "UTC")

@@ -44,21 +44,18 @@ object Fetcher {
   def etagFor(id: String, runId: Int): String =
     f"""W/"${Ids.mix64(Politeness.strHash64(id, 13L) ^ contentVersion(id, runId))}%016x""""
 
-  /** T3 — virtual fetch-WORK duration for an item, with the heavy tail real
-    * crawls have (a hung download): ~1 in 1,000 (id, run) pairs draws a
-    * pathological stall far past any budget. Distinct from
-    * `Politeness.durationMs` (the schedule's virtual clock), so the timeout
-    * never perturbs schedule parity with the sequential oracle. */
   /** A hung download stalls for ~a day — far past the reference's 2 h
     * budget, but finite and budget-independent (a roomier cfg budget can
     * legitimately absorb it). */
   val StallMs: Long = 86400000L
 
-  def fetchDurationMs(id: String, runId: Int, cfg: CrawlConfig): Long =
-    fetchDurationMsSeeded(id, runId, cfg.shuffleSeed)
-
-  def fetchDurationMsSeeded(id: String, runId: Int, seed: Long): Long = {
-    val h = Ids.mix64(Politeness.strHash64(id, seed ^ 0x7107L) ^ runId.toLong)
+  /** T3 — virtual fetch-WORK duration for an item, with the heavy tail real
+    * crawls have (a hung download): ~1 in 1,000 (id, run) pairs draws a
+    * pathological stall far past any budget. Distinct from
+    * `Politeness.durationMs` (the schedule's virtual clock), so the timeout
+    * never perturbs schedule parity with the sequential oracle. */
+  def fetchDurationMs(id: String, runId: Int, cfg: CrawlConfig): Long = {
+    val h = Ids.mix64(Politeness.strHash64(id, cfg.shuffleSeed ^ 0x7107L) ^ runId.toLong)
     val base = 50L + Math.floorMod(h, 100L)
     if (Math.floorMod(Ids.mix64(h ^ 0xBADCAFEL), 1000L) == 0L) StallMs + base
     else base
@@ -75,10 +72,19 @@ object Fetcher {
     * UpdateResult with a sentinel payload, archive.py:606-621). */
   val TimeoutStatus: Int = -2
 
+  /** The real-fetch status rule, as (status, retried): a blown per-item
+    * budget yields the timeout sentinel; otherwise the status mix, with a
+    * worker exception retried once (crawler:222-234). */
+  private def fetchStatus(id: String, runId: Int, cfg: CrawlConfig): (Int, Boolean) =
+    if (timedOut(id, runId, cfg)) (TimeoutStatus, false)
+    else {
+      val st0 = statusFor(id, runId, 0)
+      if (st0 == -1) (statusFor(id, runId, 1), true) else (st0, false)
+    }
+
   /** Conditional fetch against prior etag state — the If-Modified-Since/ETag
     * skip (archive.py:305-348): unchanged etag → 304 without a payload
-    * fetch; otherwise a real fetch with the single retry pass
-    * (crawler:222-234). */
+    * fetch; otherwise a real fetch under [[fetchStatus]]. */
   def conditionalResult(s: graft.core.ScheduledFetch, runId: Int,
                         priorEtag: Option[String], cfg: CrawlConfig = CrawlConfig()): FetchResult = {
     val newEtag = etagFor(s.id, runId)
@@ -87,12 +93,8 @@ object Fetcher {
       // can't bite it; the timeout budget applies to real fetch work only
       FetchResult(s.seq, s.id, s.fetchClass, s.startMs, 304, newEtag,
         isNew = false, retried = false)
-    } else if (timedOut(s.id, runId, cfg)) {
-      FetchResult(s.seq, s.id, s.fetchClass, s.startMs, TimeoutStatus, "",
-        isNew = false, retried = false)
     } else {
-      val st0 = statusFor(s.id, runId, 0)
-      val (stRaw, retried) = if (st0 == -1) (statusFor(s.id, runId, 1), true) else (st0, false)
+      val (stRaw, retried) = fetchStatus(s.id, runId, cfg)
       // our validator no longer matches → an actual 304 is impossible on
       // this path; the mix's 304 share re-fetches as 200
       val st = if (stRaw == 304) 200 else stRaw
@@ -105,57 +107,13 @@ object Fetcher {
     * table (J14 — both sides hash-partition on id, the reference's etag
     * side-cache lookup archive.py:194-237 as a distributed join). */
   def runWithState(spark: SparkSession, schedule: Dataset[ScheduledFetch],
-                   cfg: CrawlConfig, etagState: Dataset[EtagState]): Dataset[FetchResult] =
-    if (columnarEnabled) runWithStateColumnar(spark, schedule, cfg, etagState)
-    else {
-      import spark.implicits._
-      schedule
-        .joinWith(etagState, schedule("id") === etagState("id"), "left_outer")
-        .map { case (s, st) =>
-          conditionalResult(s, cfg.runId, Option(st).map(_.etag), cfg)
-        }
-    }
-
-  /** Column-native [[run]]: one struct-producing codegen expression per row
-    * (status, etag, retried) + plain column projections. */
-  def runColumnar(spark: SparkSession, schedule: Dataset[ScheduledFetch],
-                  cfg: CrawlConfig): Dataset[FetchResult] = {
+                   cfg: CrawlConfig, etagState: Dataset[EtagState]): Dataset[FetchResult] = {
     import spark.implicits._
-    schedule.toDF()
-      .withColumn("__c", graft.functions.GraftFunctions.fetchClassify(
-        col("id"), cfg.runId, cfg.shuffleSeed, cfg.itemTimeoutMs, conditional = false))
-      .select(col("seq"), col("id"), col("fetchClass"), col("startMs"),
-        col("__c.status").as("status"),
-        when(col("__c.status") === 200,
-          graft.functions.GraftFunctions.fetchEtag(col("id"), cfg.runId))
-          .otherwise(lit("")).as("etag"),
-        (col("__c.status") === 200).as("isNew"),
-        col("__c.retried").as("retried"))
-      .as[FetchResult]
-  }
-
-  /** Column-native [[runWithState]]: same left join, but the conditional
-    * branch ([[conditionalResult]]) is expressed as columns — prior-etag
-    * hit → 304 short-circuit, else the classify struct with the 304→200
-    * remap baked into its `conditional` mode. */
-  def runWithStateColumnar(spark: SparkSession, schedule: Dataset[ScheduledFetch],
-                           cfg: CrawlConfig, etagState: Dataset[EtagState]): Dataset[FetchResult] = {
-    import spark.implicits._
-    val st = etagState.toDF().select(col("id").as("__sid"), col("etag").as("__prior"))
-    val hit = col("__prior").isNotNull && (col("__prior") === col("__new"))
-    schedule.toDF()
-      .join(st, col("id") === col("__sid"), "left_outer")
-      .withColumn("__new", graft.functions.GraftFunctions.fetchEtag(col("id"), cfg.runId))
-      .withColumn("__c", graft.functions.GraftFunctions.fetchClassify(
-        col("id"), cfg.runId, cfg.shuffleSeed, cfg.itemTimeoutMs, conditional = true))
-      .select(col("seq"), col("id"), col("fetchClass"), col("startMs"),
-        when(hit, lit(304)).otherwise(col("__c.status")).as("status"),
-        when(hit, col("__new"))
-          .when(col("__c.status") === 200, col("__new"))
-          .otherwise(lit("")).as("etag"),
-        (!hit && (col("__c.status") === 200)).as("isNew"),
-        (!hit && col("__c.retried")).as("retried"))
-      .as[FetchResult]
+    schedule
+      .joinWith(etagState, schedule("id") === etagState("id"), "left_outer")
+      .map { case (s, st) =>
+        conditionalResult(s, cfg.runId, Option(st).map(_.etag), cfg)
+      }
   }
 
   /** P2 — composite result classification over the FOUR sub-fetches of a
@@ -202,37 +160,15 @@ object Fetcher {
   }
 
   /** Run the fetch stage over a schedule, with the single retry pass for
-    * exception rows (crawler:222-234: retry once, then record). */
-  /** Opt-in column-native classifier (SPARK_GRAFT_COLUMNAR_FETCH=1): the
-    * per-row fetch classification runs as a codegen'd Catalyst expression
-    * over UnsafeRows instead of a typed map — no encoder round-trip, no
-    * FetchResult allocation until the sink. Parity with the typed paths is
-    * spec-gated (FetcherSpec); DEFAULT OFF: the typed map is the path every
-    * published number was measured on, and speeding the parallel stage
-    * shrinks the parallel share the N→4N efficiency gate measures. */
-  private[graft] def columnarEnabled: Boolean =
-    sys.env.get("SPARK_GRAFT_COLUMNAR_FETCH")
-      .orElse(sys.props.get("spark.graft.columnar.fetch"))
-      .contains("1")
-
-  def run(spark: SparkSession, schedule: Dataset[ScheduledFetch], cfg: CrawlConfig): Dataset[FetchResult] =
-    if (columnarEnabled) runColumnar(spark, schedule, cfg)
-    else runTyped(spark, schedule, cfg)
-
-  private def runTyped(spark: SparkSession, schedule: Dataset[ScheduledFetch], cfg: CrawlConfig): Dataset[FetchResult] = {
+    * exception rows (crawler:222-234: retry once, then record). A blown
+    * per-item budget is a worker_exception sentinel, never retried in-run. */
+  def run(spark: SparkSession, schedule: Dataset[ScheduledFetch], cfg: CrawlConfig): Dataset[FetchResult] = {
     import spark.implicits._
     schedule.map { s =>
-      if (timedOut(s.id, cfg.runId, cfg)) {
-        // per-item budget blown → worker_exception sentinel, no in-run retry
-        FetchResult(s.seq, s.id, s.fetchClass, s.startMs, TimeoutStatus, "",
-          isNew = false, retried = false)
-      } else {
-        val st0 = statusFor(s.id, cfg.runId, 0)
-        val (st, retried) = if (st0 == -1) (statusFor(s.id, cfg.runId, 1), true) else (st0, false)
-        FetchResult(s.seq, s.id, s.fetchClass, s.startMs, st,
-          if (st == 200) etagFor(s.id, cfg.runId) else "",
-          isNew = st == 200, retried = retried)
-      }
+      val (st, retried) = fetchStatus(s.id, cfg.runId, cfg)
+      FetchResult(s.seq, s.id, s.fetchClass, s.startMs, st,
+        if (st == 200) etagFor(s.id, cfg.runId) else "",
+        isNew = st == 200, retried = retried)
     }
   }
 
@@ -511,31 +447,4 @@ object Payload {
     }
     img
   }
-}
-
-/** Static kernel for the column-native fetch classifier — called from both
-  * generated code and interpreted eval (the ExprImpl pattern). */
-object FetchKernel {
-  import org.apache.spark.sql.catalyst.InternalRow
-  import org.apache.spark.unsafe.types.UTF8String
-
-  /** (status, retried) for one id. `conditional` applies the conditional
-    * path's 304→200 remap (once the validator mismatched, a true 304 is
-    * impossible — see Fetcher.conditionalResult). */
-  def classify(idU: UTF8String, runId: Int, seed: Long, timeoutMs: Long,
-               conditional: Boolean): InternalRow = {
-    val id = idU.toString
-    if (Fetcher.fetchDurationMsSeeded(id, runId, seed) > timeoutMs)
-      InternalRow(Fetcher.TimeoutStatus, false)
-    else {
-      val st0 = Fetcher.statusFor(id, runId, 0)
-      val (stRaw, retried) =
-        if (st0 == -1) (Fetcher.statusFor(id, runId, 1), true) else (st0, false)
-      val st = if (conditional && stRaw == 304) 200 else stRaw
-      InternalRow(st, retried)
-    }
-  }
-
-  def etag(idU: UTF8String, runId: Int): UTF8String =
-    UTF8String.fromString(Fetcher.etagFor(idU.toString, runId))
 }

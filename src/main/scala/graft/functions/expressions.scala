@@ -419,43 +419,6 @@ case class LshBucket64(child: Expression, nPlanes: Int) extends UnaryExpression 
   override def prettyName: String = "lsh_bucket"
 }
 
-/** fetch_classify(id) → struct<status:int, retried:boolean> — the crawl's
-  * per-row result classification as ONE codegen'd expression (run
-  * parameters are plan-time constants, not child columns). Powers the
-  * column-native fetch stage (Fetcher.runColumnar), which keeps the
-  * hottest per-row work inside whole-stage codegen with no encoder
-  * round-trip. */
-case class FetchClassify(child: Expression, runId: Int, seed: Long,
-                         timeoutMs: Long, conditional: Boolean) extends UnaryExpression {
-  override def dataType: DataType = StructType(Seq(
-    StructField("status", IntegerType, nullable = false),
-    StructField("retried", BooleanType, nullable = false)))
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    graft.fetch.FetchKernel.classify(
-      input.asInstanceOf[UTF8String], runId, seed, timeoutMs, conditional)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.fetch.FetchKernel.classify($c, $runId, ${seed}L, ${timeoutMs}L, $conditional)")
-  override protected def withNewChildInternal(newChild: Expression): FetchClassify =
-    copy(child = newChild)
-  override def prettyName: String = "fetch_classify"
-}
-
-/** fetch_etag(id) → string — the deterministic synthetic ETag for
-  * (id, runId), as an expression for the columnar fetch paths. */
-case class FetchEtag(child: Expression, runId: Int) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    graft.fetch.FetchKernel.etag(input.asInstanceOf[UTF8String], runId)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.fetch.FetchKernel.etag($c, $runId)")
-  override protected def withNewChildInternal(newChild: Expression): FetchEtag =
-    copy(child = newChild)
-  override def prettyName: String = "fetch_etag"
-}
-
 /** Column-API + SQL registration for the custom expressions. */
 object GraftFunctions {
   import org.apache.spark.sql.functions.bit_count
@@ -483,15 +446,6 @@ object GraftFunctions {
   /** Hamming distance = popcount(xor) — built-ins only (reference
     * file_identifiers.py:75-83, simhashbucket:114-116). */
   def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
-
-  /** Column-native fetch classification (see Fetcher.runColumnar): one
-    * struct-producing codegen expression per row instead of a typed map. */
-  def fetchClassify(id: Column, runId: Int, seed: Long, timeoutMs: Long,
-                    conditional: Boolean): Column =
-    Bridge.column(FetchClassify(Bridge.expression(id), runId, seed, timeoutMs, conditional))
-
-  def fetchEtag(id: Column, runId: Int): Column =
-    Bridge.column(FetchEtag(Bridge.expression(id), runId))
 
   /** Register all custom expressions for SQL use (`SELECT simhash64(text)…`). */
   def register(spark: SparkSession): Unit = {

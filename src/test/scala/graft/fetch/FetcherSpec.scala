@@ -99,21 +99,7 @@ class FetcherSpec extends SparkSpec {
       .forall(_.status != Fetcher.TimeoutStatus))
   }
 
-  test("columnar fetch == typed fetch, row for row (stateless path)") {
-    val cfg = CrawlConfig(runId = 3, itemTimeoutMs = 7200000L)
-    val sched = Politeness.schedule(spark, spark.createDataset(frontier(4000)), cfg)
-    val typed = Fetcher.run(spark, sched, cfg).collect().sortBy(_.seq)
-    val columnar = Fetcher.runColumnar(spark, sched, cfg).collect().sortBy(_.seq)
-    assert(columnar.toSeq == typed.toSeq)
-    // timeout sentinels present on both (tight budget forces them)
-    val tight = cfg.copy(itemTimeoutMs = 100L)
-    val t = Fetcher.run(spark, sched, tight).collect().sortBy(_.seq)
-    val c = Fetcher.runColumnar(spark, sched, tight).collect().sortBy(_.seq)
-    assert(c.toSeq == t.toSeq)
-    assert(c.exists(_.status == Fetcher.TimeoutStatus))
-  }
-
-  test("columnar conditional fetch == typed conditional fetch (etag-state path)") {
+  test("conditional fetch: current etags 304, stale/absent never 304, timeouts") {
     import graft.core.EtagState
     val cfg = CrawlConfig(runId = 4)
     val sched = Politeness.schedule(spark, spark.createDataset(frontier(3000)), cfg)
@@ -126,21 +112,32 @@ class FetcherSpec extends SparkSpec {
       case (id, i) if i % 4 == 1 =>
         EtagState(id, "W/\"stale\"", lastRun = cfg.runId - 1)
     }.toSeq
+    val current = ids.zipWithIndex.collect { case (id, i) if i % 2 == 0 => id }.toSet
     val stateDs = spark.createDataset(state)
-    val typed = Fetcher.runWithState(spark, sched, cfg, stateDs).collect().sortBy(_.seq)
-    val columnar = Fetcher.runWithStateColumnar(spark, sched, cfg, stateDs).collect().sortBy(_.seq)
-    assert(columnar.toSeq == typed.toSeq)
-    assert(columnar.count(_.status == 304) >= ids.length / 2 - 1)
-  }
 
-  test("columnar fetch plan: whole-stage codegen, no encoder round-trip") {
-    val cfg = CrawlConfig()
-    val sched = Politeness.schedule(spark, spark.createDataset(frontier(500)), cfg)
-    val df = Fetcher.runColumnar(spark, sched, cfg).toDF()
-    df.collect()
-    val plan = df.queryExecution.executedPlan.toString
-    assert(!plan.contains("DeserializeToObject") && !plan.contains("MapElements"),
-      s"columnar path must not fall back to object mode:\n$plan")
+    def check(c: CrawlConfig): Array[graft.core.FetchResult] = {
+      val rs = Fetcher.runWithState(spark, sched, c, stateDs).collect()
+      assert(rs.length == ids.length, "every scheduled id yields exactly one result row")
+      val (hit, miss) = rs.partition(r => current(r.id))
+      assert(hit.forall(r => r.status == 304 && r.etag == Fetcher.etagFor(r.id, c.runId) &&
+        !r.isNew && !r.retried), "a current etag must short-circuit to 304 with that etag")
+      assert(miss.forall(_.status != 304), "a stale or absent etag never yields 304")
+      miss
+    }
+
+    // the mix's own 304 share re-fetches as 200 once the validator mismatched
+    val miss = check(cfg)
+    val remapped = miss.filter(r => Fetcher.statusFor(r.id, cfg.runId, 0) == 304)
+    assert(remapped.nonEmpty && remapped.forall(r => r.status == 200 && r.isNew))
+
+    // a tight budget times out real fetches, never the payload-free 304s
+    val tight = cfg.copy(itemTimeoutMs = 100L)
+    val tightMiss = check(tight)
+    val sentinels = tightMiss.filter(_.status == Fetcher.TimeoutStatus)
+    assert(sentinels.nonEmpty)
+    assert(sentinels.forall(r => !r.retried && !r.isNew && r.etag.isEmpty))
+    assert(sentinels.map(_.id).toSet ==
+      tightMiss.map(_.id).filter(id => Fetcher.timedOut(id, tight.runId, tight)).toSet)
   }
 }
 
